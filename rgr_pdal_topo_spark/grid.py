@@ -18,7 +18,7 @@ Cell encoding is the relational replacement for ``getRowColFromXY``
 
 For multi-tile scale-out, cells roll up into square tiles of
 ``tile_cells`` x ``tile_cells`` cells (``tile_id`` row-major); stencil
-operators materialize one tile (+halo) per applyInPandas group, mirroring
+operators materialize one tile (+halo) per applyInArrow group, mirroring
 the reference's tiled requests with ``tileOverlap`` halo
 (pointCloudCreation.py:458-495, overlap at :489).
 """

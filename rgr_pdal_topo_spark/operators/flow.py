@@ -36,8 +36,6 @@ reference's _getNeighborIndices for square cells (flowRoutingGrids.py:617).
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -50,6 +48,13 @@ from rgr_pdal_topo_spark.functions.flow_kernels import (
     priority_flood,
 )
 from rgr_pdal_topo_spark.grid import GridSpec
+from rgr_pdal_topo_spark.operators.stencils import (
+    _in_grid,
+    _map_tiles,
+    _materialize_with_halo,
+    _Window,
+    run_stencil,
+)
 
 #: Flow analyses run on a coarser DEM than the stencil suite so that the
 #: sf0.01 oracle grid is dense (cells mostly non-empty): 50x50 cells of
@@ -60,38 +65,6 @@ FLOW_GRID = GridSpec(x0=0.0, y0=0.0, cell=20.0, nrows=50, ncols=50)
 # ---------------------------------------------------------------------------
 # G1: distributed priority-flood pit filling
 # ---------------------------------------------------------------------------
-
-
-def _tile_rows(df: DataFrame, grid: GridSpec, tile_cells: int) -> DataFrame:
-    """Replicate (cell_row, cell_col, z, fill) rows into every tile whose
-    1-cell-padded window contains them (stencils._materialize_with_halo
-    shape, carrying two value columns)."""
-    spark = df.sparkSession
-    tiles_x = math.ceil(grid.ncols / tile_cells)
-    tiles_y = math.ceil(grid.nrows / tile_cells)
-    offs = spark.createDataFrame(
-        [(i, j) for i in (-1, 0, 1) for j in (-1, 0, 1)], "dtr int, dtc int"
-    )
-    t = F.lit(tile_cells)
-    return (
-        df.withColumn("tr", F.floor(F.col("cell_row") / t).cast("int"))
-        .withColumn("tc", F.floor(F.col("cell_col") / t).cast("int"))
-        .crossJoin(F.broadcast(offs))
-        .withColumn("tr2", F.col("tr") + F.col("dtr"))
-        .withColumn("tc2", F.col("tc") + F.col("dtc"))
-        .filter(
-            (F.col("tr2") >= 0) & (F.col("tr2") < tiles_y)
-            & (F.col("tc2") >= 0) & (F.col("tc2") < tiles_x)
-            & (F.col("cell_row") >= F.col("tr2") * t - 1)
-            & (F.col("cell_row") < (F.col("tr2") + 1) * t + 1)
-            & (F.col("cell_col") >= F.col("tc2") * t - 1)
-            & (F.col("cell_col") < (F.col("tc2") + 1) * t + 1)
-        )
-        .withColumn(
-            "tile_id", F.col("tr2").cast("long") * F.lit(tiles_x) + F.col("tc2")
-        )
-        .select("tile_id", "tr2", "tc2", "cell_row", "cell_col", "z", "fill")
-    )
 
 
 def fill_dem(
@@ -109,9 +82,10 @@ def fill_dem(
     neighbor tiles' current estimates, (b) true grid-border cells at z,
     (c) cells adjacent to NoData holes at z (the _findMaskBoundaries seed
     set, baseGrid.py:1198-1229).  Estimates decrease monotonically to the
-    sequential fill; converged tiles are skipped in later rounds.
+    sequential fill; converged tiles are skipped in later rounds.  Tiles
+    are the stencil engine's (operators/stencils.py) with a 1-cell halo;
+    cells outside the grid extent are dropped, as the stencils drop them.
     """
-    spark = grid_df.sparkSession
     dx = dy = float(grid.cell)
     nrows, ncols = grid.nrows, grid.ncols
     T = tile_cells
@@ -122,32 +96,16 @@ def fill_dem(
         # NoData rows (NULL/NaN value, e.g. fill_empty_cells' explicit
         # markers) are holes, not cells: they would otherwise enter as
         # z=NaN with fill=+inf and never be touched by any tile flood.
-        .filter(F.col("z").isNotNull() & ~F.isnan(F.col("z")))
+        .filter(F.col("z").isNotNull() & ~F.isnan(F.col("z")) & _in_grid(grid))
         .withColumn("fill", F.lit(float("inf")))
-        .persist()
+        .localCheckpoint(eager=True)
     )
-    est.count()
 
-    schema = "cell_row int, cell_col int, fill double"
-
-    def per_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        tr2 = int(pdf["tr2"].iloc[0])
-        tc2 = int(pdf["tc2"].iloc[0])
-        r0, c0 = tr2 * T - 1, tc2 * T - 1
-        r1, c1 = tr2 * T + T + 1, tc2 * T + T + 1
-        gr0, gc0 = max(r0, 0), max(c0, 0)
-        gr1, gc1 = min(r1, nrows), min(c1, ncols)
-        h, w = gr1 - gr0, gc1 - gc0
-        z = np.full((h, w), np.nan)
-        estv = np.full((h, w), np.nan)
-        rr = pdf["cell_row"].to_numpy() - gr0
-        cc = pdf["cell_col"].to_numpy() - gc0
-        z[rr, cc] = pdf["z"].to_numpy(dtype="float64")
-        estv[rr, cc] = pdf["fill"].to_numpy(dtype="float64")
-
+    def flood(win: _Window, dense: dict[str, np.ndarray]) -> dict[str, np.ndarray]:
+        z, estv = dense["z"], dense["fill"]
+        h, w = z.shape
         core = np.zeros((h, w), dtype=bool)
-        core[tr2 * T - gr0 : tr2 * T + min(T, nrows - tr2 * T) - gr0,
-             tc2 * T - gc0 : tc2 * T + min(T, ncols - tc2 * T) - gc0] = True
+        core[win.core] = True
         valid = ~np.isnan(z)
 
         # flood input: z in the core, current estimates in the halo ring
@@ -155,13 +113,13 @@ def fill_dem(
         # seeds: halo ring + true-grid border + NoData-hole-adjacent cells
         seed = (~core) & valid
         border = np.zeros((h, w), dtype=bool)
-        if gr0 == 0:
+        if win.gr0 == 0:
             border[0, :] = True
-        if gr1 == nrows:
+        if win.gr1 == nrows:
             border[-1, :] = True
-        if gc0 == 0:
+        if win.gc0 == 0:
             border[:, 0] = True
-        if gc1 == ncols:
+        if win.gc1 == ncols:
             border[:, -1] = True
         hole = np.pad(valid, 1, mode="constant", constant_values=True)
         near_hole = np.zeros((h, w), dtype=bool)
@@ -174,22 +132,23 @@ def fill_dem(
             arr, dx, dy, agg_slope, seed_mask=seed, seed_elev=arr
         )
         keep = core & valid
-        return pd.DataFrame(
-            {
-                "cell_row": (np.nonzero(keep)[0] + gr0).astype("int32"),
-                "cell_col": (np.nonzero(keep)[1] + gc0).astype("int32"),
-                "fill": out[keep],
-            }
-        )
+        rr, cc = np.nonzero(keep)
+        return {
+            "cell_row": (rr + win.gr0).astype("int32"),
+            "cell_col": (cc + win.gc0).astype("int32"),
+            "fill": out[keep],
+        }
 
-    tiles_x = math.ceil(ncols / T)
     active: DataFrame | None = None  # None = all tiles
     converged = False
     for _ in range(max_rounds):
-        tiles = _tile_rows(est, grid, T)
+        tiles = _materialize_with_halo(est, grid, T, 1)
         if active is not None:
             tiles = tiles.join(F.broadcast(active), "tile_id", "left_semi")
-        new_fill = tiles.groupBy("tile_id").applyInPandas(per_tile, schema)
+        new_fill = _map_tiles(
+            tiles, grid, T, 1, ["z", "fill"], flood,
+            "cell_row int, cell_col int, fill double",
+        )
         updated = (
             est.withColumnRenamed("fill", "fill_old")
             .join(new_fill, ["cell_row", "cell_col"], "left")
@@ -205,31 +164,17 @@ def fill_dem(
         )
         changed = updated.filter("changed")
         n_changed = changed.count()
-        old = est
-        est = updated.drop("changed").persist()
-        old.unpersist()
+        est = updated.drop("changed")
         if n_changed == 0:
             converged = True
             break
-        # next round: only tiles whose padded window saw a change
-        t = F.lit(T)
+        # next round: only tiles whose padded window holds a changed cell
+        # (a tile's flood reads nothing else, so the rest would repeat)
         active = (
-            changed.select(
-                F.floor(F.col("cell_row") / t).cast("int").alias("tr"),
-                F.floor(F.col("cell_col") / t).cast("int").alias("tc"),
+            _materialize_with_halo(
+                changed.select("cell_row", "cell_col"), grid, T, 1
             )
-            .crossJoin(
-                F.broadcast(
-                    spark.createDataFrame(
-                        [(i, j) for i in (-1, 0, 1) for j in (-1, 0, 1)],
-                        "dtr int, dtc int",
-                    )
-                )
-            )
-            .select(
-                ((F.col("tr") + F.col("dtr")).cast("long") * F.lit(tiles_x)
-                 + F.col("tc") + F.col("dtc")).alias("tile_id")
-            )
+            .select("tile_id")
             .distinct()
         )
     if not converged:
@@ -261,14 +206,11 @@ def d8_flow_dir_df(
     (_assignFlowDir, flowRoutingGrids.py:549-597).  Missing neighbors are
     excluded from the argmax (the engine's NoData rule; the reference's
     np.argmax NaN poisoning is an artifact, SURVEY.md §2.8)."""
-    from rgr_pdal_topo_spark.operators.stencils import run_stencil
-
     out = run_stencil(
         fill_df.withColumnRenamed(value_col, "value"), grid, "d8_flow_dir",
         tile_cells=tile_cells, out_col="fd",
     )
-    # applyInPandas maps NaN -> NULL through Arrow: filter both spellings
-    return out.filter(F.col("fd").isNotNull() & ~F.isnan("fd")).select(
+    return out.filter(F.col("fd").isNotNull()).select(
         "cell_row", "cell_col", F.col("fd").cast("int").alias("fd")
     )
 
@@ -303,11 +245,10 @@ def _pointer_double(
     ptr: (id long, ptr long) where terminals have ptr == id.  Returns
     (id, root).  O(log longest-path) self-joins (G8: the reference's
     per-cell upstream BFS, flowRoutingGrids.py:849-902, re-expressed)."""
-    p = ptr.persist()
-    p.count()
+    p = ptr.localCheckpoint(eager=True)
     converged = False
     for _ in range(max_rounds):
-        nxt = (
+        p = (
             p.alias("a")
             .join(
                 p.select(
@@ -315,18 +256,14 @@ def _pointer_double(
                 ),
                 F.col("a.ptr") == F.col("b_id"),
             )
-            .select(F.col("a.id").alias("id"), F.col("b_ptr").alias("ptr"))
+            .select(
+                F.col("a.id").alias("id"),
+                F.col("b_ptr").alias("ptr"),
+                (F.col("b_ptr") != F.col("a.ptr")).alias("moved"),
+            )
             .localCheckpoint(eager=True)
         )
-        n_moving = (
-            nxt.alias("n")
-            .join(p.alias("o"), "id")
-            .filter(F.col("n.ptr") != F.col("o.ptr"))
-            .count()
-        )
-        p.unpersist()
-        p = nxt.persist()
-        if n_moving == 0:
+        if p.filter("moved").isEmpty():
             converged = True
             break
     if not converged:
@@ -334,7 +271,7 @@ def _pointer_double(
             f"pointer doubling did not converge within {max_rounds} "
             "rounds — the edge table likely contains a cycle"
         )
-    return p.withColumnRenamed("ptr", "root")
+    return p.select("id", F.col("ptr").alias("root"))
 
 
 def flow_metrics(

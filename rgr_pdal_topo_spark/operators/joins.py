@@ -478,82 +478,50 @@ def knn_join_grid(
         .withColumn("by", F.col("by0") + F.col("oy"))
         .drop("bx0", "by0", "ox", "oy")
     )
-    cand = p.join(F.broadcast(q), ["bx", "by"])
-    d2 = (cand.x - F.col(qx)) * (cand.x - F.col(qx)) + (
-        cand.y - F.col(qy)
-    ) * (cand.y - F.col(qy))
-    best = (
-        cand.withColumn("dist2", d2)
-        .groupBy(qid, qx, qy)
-        .agg(
-            F.min(
-                F.struct(
-                    F.col("dist2"), F.col("pid"), F.col(value_col).alias("v")
-                )
-            ).alias("b")
+    def nearest(pairs: DataFrame) -> DataFrame:
+        """Per query, the (dist2, pid, value) of its nearest candidate."""
+        d2 = (F.col("x") - F.col(qx)) * (F.col("x") - F.col(qx)) + (
+            F.col("y") - F.col(qy)
+        ) * (F.col("y") - F.col(qy))
+        return (
+            pairs.withColumn("dist2", d2)
+            .groupBy(qid, qx, qy)
+            .agg(
+                F.min(
+                    F.struct(
+                        F.col("dist2"), F.col("pid"), F.col(value_col).alias("v")
+                    )
+                ).alias("b")
+            )
+            .select(
+                qid, qx, qy,
+                F.col("b.dist2").alias("dist2"),
+                F.col("b.pid").alias("pid"),
+                F.col("b.v").alias("_v"),
+            )
         )
-        .select(
-            qid, qx, qy,
-            F.col("b.dist2").alias("dist2"),
-            F.col("b.pid").alias("pid"),
-            F.col("b.v").alias("_v"),
-        )
-    )
+
     # best is one row per query (tiny): materialize it once so the
     # resolved/unresolved split and the union don't re-execute the
     # candidate join DAG (localCheckpoint frees with the DataFrame,
     # unlike persist which would leak across calls)
-    best = best.localCheckpoint(eager=True)
-    resolved = best.filter(F.col("dist2") <= F.lit(bucket * bucket))
-    unresolved = queries.join(
-        resolved.select(qid), qid, "left_anti"
+    best = nearest(p.join(F.broadcast(q), ["bx", "by"])).localCheckpoint(
+        eager=True
     )
-    if unresolved.isEmpty():  # common case: ring guarantee held everywhere
-        out = resolved.withColumn("nn_dist", F.sqrt("dist2"))
-        if max_dist is not None:
-            out = out.withColumn(
-                "nn_value",
-                F.when(
-                    F.col("nn_dist") > F.lit(max_dist), F.lit(sentinel)
-                ).otherwise(F.col("_v")),
-            )
-        else:
-            out = out.withColumn("nn_value", F.col("_v"))
-        return out.drop("_v")
-    # rare fallback: exact global argmin for the unresolved handful
-    fb = (
-        points.crossJoin(F.broadcast(unresolved))
-        .withColumn(
-            "dist2",
-            (F.col("x") - F.col(qx)) * (F.col("x") - F.col(qx))
-            + (F.col("y") - F.col(qy)) * (F.col("y") - F.col(qy)),
+    out = best.filter(F.col("dist2") <= F.lit(bucket * bucket))
+    unresolved = queries.join(out.select(qid), qid, "left_anti")
+    if not unresolved.isEmpty():  # rare: the ring guarantee failed
+        # exact global argmin for the unresolved handful
+        out = out.unionByName(
+            nearest(points.crossJoin(F.broadcast(unresolved)))
         )
-        .groupBy(qid, qx, qy)
-        .agg(
-            F.min(
-                F.struct(
-                    F.col("dist2"), F.col("pid"), F.col(value_col).alias("v")
-                )
-            ).alias("b")
-        )
-        .select(
-            qid, qx, qy,
-            F.col("b.dist2").alias("dist2"),
-            F.col("b.pid").alias("pid"),
-            F.col("b.v").alias("_v"),
-        )
-    )
-    out = resolved.unionByName(fb).withColumn("nn_dist", F.sqrt("dist2"))
+    out = out.withColumn("nn_dist", F.sqrt("dist2"))
+    nn_value = F.col("_v")
     if max_dist is not None:
-        out = out.withColumn(
-            "nn_value",
-            F.when(F.col("nn_dist") > F.lit(max_dist), F.lit(sentinel)).otherwise(
-                F.col("_v")
-            ),
-        )
-    else:
-        out = out.withColumn("nn_value", F.col("_v"))
-    return out.drop("_v")
+        nn_value = F.when(
+            F.col("nn_dist") > F.lit(max_dist), F.lit(sentinel)
+        ).otherwise(nn_value)
+    return out.withColumn("nn_value", nn_value).drop("_v")
 
 
 # --------------------------------------------------------------------------

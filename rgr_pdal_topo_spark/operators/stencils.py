@@ -2,14 +2,17 @@
 
 The reference's tiled pipeline builds per-tile requests with a halo
 (``tileOverlap``, pointCloudCreation.py:458-495 at :489) and runs NumPy
-kernels eagerly per grid (dem.py).  Here the same shape is Spark-native:
+kernels eagerly per grid (dem.py).  Here the same shape is Spark-native,
+and this module is the engine's one copy of that tile layout (the flow
+fill fixpoint, operators/flow.py, runs on it too):
 
-  1. long-form grid rows are assigned to their home tile AND replicated
-     into the halo region of up-to-3 neighboring tiles (a deliberate
-     row-duplication transform — Catalyst cannot invent it, SURVEY.md §4);
-  2. one grouped-map stage per tile (``applyInArrow`` by default,
-     ``applyInPandas`` spelling available) materializes a dense
-     (T+2h) x (T+2h) float64 array (NaN = missing/NoData) and runs the
+  1. long-form grid rows are clamped to the grid extent, assigned to
+     their home tile AND replicated into the halo region of up-to-3
+     neighboring tiles (a deliberate row-duplication transform — Catalyst
+     cannot invent it, SURVEY.md §4);
+  2. one ``applyInArrow`` grouped-map stage per tile materializes a dense
+     (T+2h) x (T+2h) float64 array per value column (NaN =
+     missing/NoData) and runs the per-tile NumPy core — for stencils the
      *identical* reference kernel (functions/kernels.py);
   3. each tile emits only its own core cells, so the union over tiles is
      exactly the single-machine full-grid result — asserted by
@@ -22,16 +25,17 @@ margins only; interior tile borders always see real halo data.
 
 Scale notes: the shuffle is one hash partition by tile_id with ~(1+2h/T)^2
 replication overhead; tile size bounds executor memory at
-(T+2h)^2 * 8 bytes per group regardless of total grid size.
+(T+2h)^2 * 8 bytes per value column per group regardless of total grid
+size.
 """
 
 from __future__ import annotations
 
 import math
+from typing import Callable, NamedTuple
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rgr_pdal_topo_spark.functions.kernels import KERNELS, kernel_halo
@@ -40,19 +44,28 @@ from rgr_pdal_topo_spark.grid import GridSpec
 _PAD_NUMPY_MODE = {"repeat": "edge", "reflect": "symmetric"}
 
 
-def _materialize_with_halo(
-    grid_df: DataFrame, grid: GridSpec, tile_cells: int, halo: int
-) -> DataFrame:
-    """Replicate each cell into every tile whose padded window needs it."""
-    if halo > tile_cells:
-        raise ValueError(f"halo {halo} must be <= tile_cells {tile_cells}")
-    spark = grid_df.sparkSession
-    # out-of-extent rows would scatter into wrong tile positions (negative
-    # numpy indexing) or crash the worker: clamp to the grid universe
-    grid_df = grid_df.filter(
+def _in_grid(grid: GridSpec) -> Column:
+    """Cells inside the grid extent.  Out-of-extent rows (e.g. a point on
+    the east edge, which ``grid_points`` puts at ``cell_col == ncols``)
+    would scatter into wrong tile positions (negative numpy indexing) or
+    crash the worker, so the tile layout drops them."""
+    return (
         (F.col("cell_row") >= 0) & (F.col("cell_row") < grid.nrows)
         & (F.col("cell_col") >= 0) & (F.col("cell_col") < grid.ncols)
     )
+
+
+def _materialize_with_halo(
+    grid_df: DataFrame, grid: GridSpec, tile_cells: int, halo: int
+) -> DataFrame:
+    """Replicate each cell into every tile whose padded window needs it.
+
+    Returns (tile_id, tr2, tc2, *grid_df's columns): the value columns
+    ride along unchanged."""
+    if halo > tile_cells:
+        raise ValueError(f"halo {halo} must be <= tile_cells {tile_cells}")
+    spark = grid_df.sparkSession
+    grid_df = grid_df.filter(_in_grid(grid))
     tiles_x = math.ceil(grid.ncols / tile_cells)
     tiles_y = math.ceil(grid.nrows / tile_cells)
     offs = spark.createDataFrame(
@@ -78,7 +91,77 @@ def _materialize_with_halo(
             (F.col("tr2").cast("long") * F.lit(tiles_x) + F.col("tc2")),
         )
     )
-    return out.select("tile_id", "tr2", "tc2", "cell_row", "cell_col", "value")
+    return out.select("tile_id", "tr2", "tc2", *grid_df.columns)
+
+
+class _Window(NamedTuple):
+    """Tile (tr2, tc2)'s padded window.  Its in-grid part, rows gr0..gr1-1
+    x cols gc0..gc1-1, is the dense array a tile core receives; ``pads``
+    are the out-of-grid margins np.pad restores; the tile's own (core)
+    cells are rows row0..row0+n_r-1 x cols col0..col0+n_c-1."""
+
+    gr0: int
+    gc0: int
+    gr1: int
+    gc1: int
+    pads: tuple[tuple[int, int], tuple[int, int]]
+    row0: int
+    col0: int
+    n_r: int
+    n_c: int
+
+    @property
+    def core(self) -> tuple[slice, slice]:
+        """The core cells' slice of the dense array."""
+        r, c = self.row0 - self.gr0, self.col0 - self.gc0
+        return slice(r, r + self.n_r), slice(c, c + self.n_c)
+
+
+def _map_tiles(
+    tiles: DataFrame,
+    grid: GridSpec,
+    tile_cells: int,
+    halo: int,
+    value_cols: list[str],
+    core: Callable[[_Window, dict[str, np.ndarray]], dict[str, np.ndarray]],
+    schema: str,
+) -> DataFrame:
+    """Run ``core(window, dense)`` once per tile of ``_materialize_with_halo``
+    rows through ``applyInArrow``.  ``dense`` maps each value column to
+    its window's float64 array (NaN = no row); rows with a NULL
+    ``cell_row`` (tile anchors) only make their tile's group exist.
+    ``core`` returns the output columns of ``schema``."""
+    T, nrows, ncols = tile_cells, grid.nrows, grid.ncols
+
+    def per_tile(tbl):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        tr2 = tbl.column("tr2")[0].as_py()
+        tc2 = tbl.column("tc2")[0].as_py()
+        r0, c0 = tr2 * T - halo, tc2 * T - halo  # padded-window origin
+        r1, c1 = tr2 * T + T + halo, tc2 * T + T + halo  # exclusive
+        gr0, gc0 = max(r0, 0), max(c0, 0)
+        gr1, gc1 = min(r1, nrows), min(c1, ncols)
+        w = _Window(
+            gr0, gc0, gr1, gc1,
+            ((gr0 - r0, r1 - gr1), (gc0 - c0, c1 - gc1)),
+            tr2 * T, tc2 * T, min(T, nrows - tr2 * T), min(T, ncols - tc2 * T),
+        )
+        data = tbl.filter(pc.is_valid(tbl.column("cell_row")))
+        rr = data.column("cell_row").to_numpy().astype("int64") - gr0
+        cc = data.column("cell_col").to_numpy().astype("int64") - gc0
+        dense = {}
+        for c in value_cols:
+            dense[c] = np.full((gr1 - gr0, gc1 - gc0), np.nan)
+            dense[c][rr, cc] = data.column(c).to_numpy().astype("float64")
+        # from_pandas=True converts NaN -> NULL: a missing output is SQL
+        # NULL, never NaN (the engine's output contract)
+        return pa.table(
+            {k: pa.array(v, from_pandas=True) for k, v in core(w, dense).items()}
+        )
+
+    return tiles.groupBy("tile_id").applyInArrow(per_tile, schema=schema)
 
 
 def run_stencils(
@@ -87,69 +170,41 @@ def run_stencils(
     specs: dict[str, tuple[str, dict]],
     tile_cells: int = 64,
     value_col: str = "value",
-    transport: str = "arrow",
 ) -> DataFrame:
     """Run one or more stencil kernels over a long-form grid in ONE shuffle.
 
     specs: {output_column: (kernel_name, params)}.
     Returns (cell_row int, cell_col int, <out> double ...) for every cell of
     the dense grid universe covered by tiles (missing input cells = NaN in,
-    NaN/kernel-defined out).
-
-    transport: "arrow" (default) runs the per-tile NumPy core via
-    ``applyInArrow`` — RecordBatch columns convert to/from NumPy without
-    the pandas block-manager copy on either side of the worker;
-    "pandas" is the equivalent ``applyInPandas`` spelling.  Both call the
-    IDENTICAL tile core, so outputs are bit-for-bit equal
-    (tests/test_stencils.py asserts it); measured A/B at sf0.1 the arrow
-    path is ~14% faster on the 10-output stencil_suite (2.26 vs 2.63 s,
-    3-run means) and within noise on single-kernel queries — the win is
-    per-column conversion overhead, so it grows with output width.
+    NULL/kernel-defined out).  The per-tile NumPy core runs via
+    ``applyInArrow``: RecordBatch columns convert to/from NumPy without a
+    pandas block-manager copy on either side of the worker.
     """
-    if value_col != "value":
-        grid_df = grid_df.withColumn("value", F.col(value_col))
     halos = {
         out: kernel_halo(kname, params, grid.cell, grid.cell)
         for out, (kname, params) in specs.items()
     }
     halo = max(halos.values())
     dx = dy = float(grid.cell)
-    nrows, ncols = grid.nrows, grid.ncols
-    T = tile_cells
     out_cols = list(specs.keys())
     schema = "cell_row int, cell_col int, " + ", ".join(
         f"{c} double" for c in out_cols
     )
 
     def tile_core(
-        tr2: int, tc2: int,
-        rows_in: np.ndarray, cols_in: np.ndarray, vals_in: np.ndarray,
+        w: _Window, dense: dict[str, np.ndarray]
     ) -> dict[str, np.ndarray]:
-        """The per-tile NumPy computation, transport-agnostic: dense-ify
-        the tile's (row, col, value) triples with halo, run every kernel,
-        return the core-region output columns."""
-        r0, c0 = tr2 * T - halo, tc2 * T - halo  # padded-window origin
-        r1, c1 = tr2 * T + T + halo, tc2 * T + T + halo  # exclusive
-        gr0, gc0 = max(r0, 0), max(c0, 0)
-        gr1, gc1 = min(r1, nrows), min(c1, ncols)
-        valid = np.full((gr1 - gr0, gc1 - gc0), np.nan)
-        valid[rows_in - gr0, cols_in - gc0] = vals_in
-        pads = ((gr0 - r0, r1 - gr1), (gc0 - c0, c1 - gc1))
-
-        # core (tile-own) region size:
-        n_core_r = min(T, nrows - tr2 * T)
-        n_core_c = min(T, ncols - tc2 * T)
-
+        """Run every kernel on the tile's padded window and return the
+        core-region output columns."""
+        valid = dense["value"]
         cols: dict[str, np.ndarray] = {}
         for out, (kname, params) in specs.items():
             k = KERNELS[kname]
             h = halos[out]
-            if k.pad_mode in _PAD_NUMPY_MODE and (
-                pads[0][0] or pads[0][1] or pads[1][0] or pads[1][1]
-            ):
-                arr = np.pad(valid, pads, mode=_PAD_NUMPY_MODE[k.pad_mode])
+            if k.pad_mode in _PAD_NUMPY_MODE and any(map(any, w.pads)):
+                arr = np.pad(valid, w.pads, mode=_PAD_NUMPY_MODE[k.pad_mode])
             else:
-                arr = np.pad(valid, pads, mode="constant",
+                arr = np.pad(valid, w.pads, mode="constant",
                              constant_values=np.nan)
             # shrink padding to this kernel's own halo
             s = halo - h
@@ -158,11 +213,11 @@ def run_stencils(
             res = k.fn(arr, dx, dy, **params)
             # arr was normalized to this kernel's halo, so res always covers
             # rows r0+halo..r1-halo-1, i.e. starts exactly at the tile origin.
-            cols[out] = res[:n_core_r, :n_core_c]
+            cols[out] = res[:w.n_r, :w.n_c]
 
         rows_idx, cols_idx = np.meshgrid(
-            np.arange(tr2 * T, tr2 * T + n_core_r),
-            np.arange(tc2 * T, tc2 * T + n_core_c),
+            np.arange(w.row0, w.row0 + w.n_r),
+            np.arange(w.col0, w.col0 + w.n_c),
             indexing="ij",
         )
         data = {
@@ -173,40 +228,10 @@ def run_stencils(
             data[out] = cols[out].ravel()
         return data
 
-    def per_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        tr2 = int(pdf["tr2"].iloc[0])
-        tc2 = int(pdf["tc2"].iloc[0])
-        data = pdf[pdf["cell_row"].notna()]  # drop the universe anchor row
-        return pd.DataFrame(tile_core(
-            tr2, tc2,
-            data["cell_row"].to_numpy(dtype="int64"),
-            data["cell_col"].to_numpy(dtype="int64"),
-            data["value"].to_numpy(dtype="float64"),
-        ))
-
-    def per_tile_arrow(tbl):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        tr2 = tbl.column("tr2")[0].as_py()
-        tc2 = tbl.column("tc2")[0].as_py()
-        data = tbl.filter(pc.is_valid(tbl.column("cell_row")))
-        out = tile_core(
-            tr2, tc2,
-            data.column("cell_row").to_numpy().astype("int64"),
-            data.column("cell_col").to_numpy().astype("int64"),
-            data.column("value").to_numpy().astype("float64"),
-        )
-        # from_pandas=True converts NaN -> NULL, matching what the
-        # applyInPandas serializer does implicitly: both transports must
-        # emit the SAME null mask (missing cell = SQL NULL, never NaN)
-        # or the default-transport switch would silently change the
-        # engine's output contract.
-        return pa.table(
-            {k: pa.array(v, from_pandas=True) for k, v in out.items()}
-        )
-
-    tiles = _materialize_with_halo(grid_df, grid, tile_cells, halo)
+    tiles = _materialize_with_halo(
+        grid_df.select("cell_row", "cell_col", F.col(value_col).alias("value")),
+        grid, tile_cells, halo,
+    )
     # anchor row per tile: tiles with zero input cells must still emit
     # their (all-NaN-in) core universe so the output row set is the full
     # dense grid regardless of data sparsity (matches the SQL oracles)
@@ -221,13 +246,10 @@ def run_stencils(
         "CAST(NULL AS INT) AS cell_col",
         "CAST(NULL AS DOUBLE) AS value",
     )
-    tiles = tiles.unionByName(anchors)
-    grouped = tiles.groupBy("tile_id")
-    if transport == "arrow":
-        return grouped.applyInArrow(per_tile_arrow, schema=schema)
-    if transport == "pandas":
-        return grouped.applyInPandas(per_tile, schema=schema)
-    raise ValueError(f"unknown transport {transport!r}")
+    return _map_tiles(
+        tiles.unionByName(anchors), grid, tile_cells, halo, ["value"],
+        tile_core, schema,
+    )
 
 
 def run_stencil(
@@ -237,11 +259,9 @@ def run_stencil(
     params: dict | None = None,
     tile_cells: int = 64,
     out_col: str | None = None,
-    transport: str = "arrow",
 ) -> DataFrame:
     return run_stencils(
-        grid_df, grid, {out_col or kernel: (kernel, params or {})},
-        tile_cells, transport=transport,
+        grid_df, grid, {out_col or kernel: (kernel, params or {})}, tile_cells
     )
 
 

@@ -11822,10 +11822,11 @@ def q_score_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     immaterial; the only window runs over the DISTINCT score groups.
 
     Scale shape: the corpus folds into per-score-group (npos, nneg)
-    partials map-side; the cumulative window runs on <= 16385 group
-    rows (the q13 score range), never the raw table — the classic
-    "histogram AUC" trick that makes sklearn-style pairwise AUC
-    feasible at 10^12 rows."""
+    partials map-side; the cumulative window runs on one row per
+    distinct q13 score (score_q is unclipped, so the data bounds that
+    count, not a fixed score range), never the raw table — the
+    classic "histogram AUC" trick that makes sklearn-style pairwise
+    AUC feasible at 10^12 rows."""
     from pyspark.sql import Window
 
     from rgr_pdal_topo_spark.sources.tables import load_table

@@ -95,6 +95,35 @@ def test_distributed_fill_matches_sequential(spark, with_holes):
     assert np.all(np.isnan(got[~valid]))
 
 
+def test_out_of_extent_cell_is_dropped(spark):
+    """A point at x = x0 + ncols*cell lands in cell_col == ncols (the
+    grid_points encoding).  fill_dem and flow_metrics drop that cell, as
+    the stencil engine does, instead of crashing the tile worker."""
+    z = make_dem()
+    base = dem_df(spark, z)
+    edge = spark.createDataFrame(
+        [(10, GRID.ncols, 90.0)], "cell_row int, cell_col int, value double"
+    )
+    key = ["cell_row", "cell_col"]
+    for run in (
+        lambda df: flow.fill_dem(df, GRID, AGG, tile_cells=16),
+        lambda df: flow.flow_metrics(df, GRID, agg_slope=AGG, tile_cells=16),
+    ):
+        want = run(base).toPandas().sort_values(key).reset_index(drop=True)
+        got = run(base.unionByName(edge)).toPandas()
+        got = got.sort_values(key).reset_index(drop=True)
+        pd.testing.assert_frame_equal(got, want)
+
+
+def test_flow_metrics_releases_cache(spark):
+    """The fill and pointer-doubling loops checkpoint their rounds and
+    leave nothing in Spark's cache manager after the sink."""
+    spark.catalog.clearCache()
+    out = flow.flow_metrics(dem_df(spark, make_dem()), GRID, agg_slope=AGG)
+    out.write.format("noop").mode("overwrite").save()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_flow_metrics_matches_sequential(spark):
     z = make_dem()
     filled = oracle_fill(z)

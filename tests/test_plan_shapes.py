@@ -175,15 +175,13 @@ def test_multimodal_features_single_python_stage(spark):
 def test_stencil_suite_two_arrow_stages(spark):
     """Eleven DEM kernels must share ONE grouped-map stage (plus one for
     the mask grid) — per-kernel stages would multiply the halo shuffle.
-    The stencil engine defaults to applyInArrow (FlatMapGroupsInArrow);
-    count both spellings so a transport change can't hide extra stages."""
+    The stencil engine's one transport is applyInArrow
+    (FlatMapGroupsInArrow)."""
     from rgr_pdal_topo_spark.queries import QUERIES
 
     plan = _plan(QUERIES["stencil_suite"](spark, SF_DIR))
-    n_grouped = plan.count("FlatMapGroupsInArrow") + plan.count(
-        "FlatMapGroupsInPandas"
-    )
-    assert n_grouped == 2
+    assert plan.count("FlatMapGroupsInArrow") == 2
+    assert "FlatMapGroupsInPandas" not in plan
     assert "CartesianProduct" not in plan
 
 
